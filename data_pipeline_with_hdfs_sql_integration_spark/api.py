@@ -9,19 +9,32 @@ without the gRPC deployment skin.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import threading
+from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from data_pipeline_with_hdfs_sql_integration_spark.operators.block_locations import block_histogram_dict
-from data_pipeline_with_hdfs_sql_integration_spark.operators.partition_cache import CacheResult, PartitionCache
+from data_pipeline_with_hdfs_sql_integration_spark.operators.partition_cache import (
+    CacheResult,
+    PartitionCache,
+    delete_tree,
+)
 from data_pipeline_with_hdfs_sql_integration_spark.operators.retry import with_retry
 
 
 @dataclass
 class Pipeline:
-    """One engine instance bound to a main dataset + cache location."""
+    """One engine instance bound to a main dataset + cache location.
+
+    Requests share one ``PartitionCache`` per version of main, built on
+    the first ``calc_avg`` after each ``db_to_store``; its per-key locks
+    make same-key requests single-flight. The cache holds a DataFrame
+    over main, and with it main's file listing, so ``db_to_store`` must
+    be the only writer of ``main_path``: it drops the held cache before
+    it rewrites main.
+    """
 
     spark: SparkSession
     main_path: str
@@ -34,6 +47,10 @@ class Pipeline:
     #: the WebHDFS REST protocol — the reference's actual wire path
     #: (server.py:72) — instead of the Hadoop FileSystem JVM API.
     webhdfs_url: str | None = None
+    _held: PartitionCache | None = field(default=None, init=False, repr=False, compare=False)
+    _held_lock: threading.Lock = field(
+        default_factory=threading.Lock, init=False, repr=False, compare=False
+    )
 
     def db_to_store(
         self,
@@ -48,7 +65,9 @@ class Pipeline:
         """Extract → optional broadcast join → band filter → parquet sink.
 
         Returns the row-count status string like reference server.py:57-58.
-        Retries the whole job like server.py:25-27/61-68 (O14).
+        Retries the whole job like server.py:25-27/61-68 (O14). The row
+        count is an observed metric of the write itself: one job, no
+        re-read of the written file.
         """
 
         def run() -> str:
@@ -58,9 +77,15 @@ class Pipeline:
             if band_col is not None and band is not None:
                 lo, hi = band
                 df = df.filter((F.col(band_col) > lo) & (F.col(band_col) < hi))
-            df.write.mode("overwrite").parquet(self.main_path)
-            n = self.spark.read.parquet(self.main_path).count()
-            return f"Imported {n} rows to {self.main_path}"
+            obs = Observation()
+            # Held under the lock so no request builds a cache over a
+            # half-written main.
+            with self._held_lock:
+                self._held = None
+                df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+                    "overwrite"
+                ).parquet(self.main_path)
+            return f"Imported {obs.get['n']} rows to {self.main_path}"
 
         return with_retry(run, attempts=attempts, sleep_s=sleep_s)
 
@@ -80,17 +105,22 @@ class Pipeline:
         return block_histogram_dict(self.spark, path or self.main_path)
 
     def _cache(self) -> PartitionCache:
-        return PartitionCache(
-            self.spark,
-            self.spark.read.parquet(self.main_path),
-            self.key_col,
-            self.value_col,
-            self.cache_root,
-            replication=self.cache_replication,
-        )
+        with self._held_lock:
+            if self._held is None:
+                self._held = PartitionCache(
+                    self.spark,
+                    self.spark.read.parquet(self.main_path),
+                    self.key_col,
+                    self.value_col,
+                    self.cache_root,
+                    replication=self.cache_replication,
+                )
+            return self._held
 
     def calc_avg(self, key: object) -> CacheResult:
         return self._cache().calc_avg(key)
 
     def invalidate_cache(self) -> None:
-        self._cache().invalidate()
+        # What PartitionCache.invalidate does, without building the
+        # held cache: that would read main.
+        delete_tree(self.spark, self.cache_root)

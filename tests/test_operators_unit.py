@@ -62,6 +62,64 @@ def test_avg_truncates_toward_zero(cache):
     assert res.avg == int(row)
 
 
+def test_cache_same_key_single_flight_across_invalidates(cache):
+    """8 concurrent requests for one key, with invalidate() between
+    waves: every request answers the same average, and each
+    invalidate epoch writes the partition exactly once (the others
+    wait on the key's lock, then reuse what the writer committed)."""
+    import sys
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    n = 8
+    avgs = set()
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for _ in range(3):
+            cache.invalidate()
+            start = threading.Barrier(n, timeout=60)
+
+            def request():
+                start.wait()
+                return cache.calc_avg(5)
+
+            with ThreadPoolExecutor(max_workers=n) as pool:
+                futures = [pool.submit(request) for _ in range(n)]
+                results = [f.result(timeout=300) for f in futures]
+            assert all(r.error == "" for r in results), [r.error for r in results]
+            assert sorted(r.source for r in results) == ["create"] + ["reuse"] * (n - 1)
+            avgs |= {r.avg for r in results}
+    finally:
+        sys.setswitchinterval(switch)
+    assert len(avgs) == 1
+
+
+def test_cache_uncommitted_partition_takes_create_path(cache):
+    # What a crashed or in-flight write leaves: _temporary, no _SUCCESS.
+    tmp = os.path.join(cache.partition_path(7), "_temporary", "0")
+    os.makedirs(tmp)
+    with open(os.path.join(tmp, "part-00000.parquet"), "wb") as fh:
+        fh.write(b"half-written")
+    first = cache.calc_avg(7)
+    assert first.source == "create" and first.error == ""
+    assert cache.calc_avg(7).source == "reuse"
+
+
+def test_cache_lost_part_files_recreate_then_reuse(cache):
+    first = cache.calc_avg(12)
+    path = cache.partition_path(12)
+    lost = glob.glob(path + "/part-*") + glob.glob(path + "/.part-*")
+    assert lost
+    for f in lost:
+        os.remove(f)
+    assert os.path.exists(os.path.join(path, "_SUCCESS"))
+    again = cache.calc_avg(12)
+    assert again.source == "recreate" and again.error == "" and again.avg == first.avg
+    third = cache.calc_avg(12)
+    assert third.source == "reuse" and third.avg == first.avg
+
+
 def test_retry_succeeds_after_failures():
     from data_pipeline_with_hdfs_sql_integration_spark.operators.retry import with_retry
 
@@ -130,6 +188,51 @@ def test_pipeline_facade_end_to_end(spark):
     assert sum(hist.values()) >= 1
 
 
+def test_pipeline_holds_one_cache_per_main_version(spark):
+    """Requests share one PartitionCache until db_to_store rewrites
+    main; the next request then answers from the new main, not from a
+    stale file listing of the old one."""
+    from pyspark.sql import functions as F
+
+    from data_pipeline_with_hdfs_sql_integration_spark.api import Pipeline
+    from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
+
+    root = tempfile.mkdtemp(prefix="dps_pipe_")
+    pipe = Pipeline(
+        spark=spark,
+        main_path=os.path.join(root, "main.parquet"),
+        cache_root=os.path.join(root, "partitions"),
+        key_col="c_nationkey",
+        value_col="o_totalprice",
+    )
+    orders = load(spark, SF_DIR, "orders")
+    cust = load(spark, SF_DIR, "customer").select("c_custkey", "c_nationkey")
+
+    def ingest(band):
+        status = pipe.db_to_store(
+            orders, band_col="o_totalprice", band=band, dim=cust,
+            join_on=orders.o_custkey == cust.c_custkey, attempts=1, sleep_s=0.0,
+        )
+        n = spark.read.parquet(pipe.main_path).count()
+        assert status == f"Imported {n} rows to {pipe.main_path}"
+
+    def exact(key):
+        main = spark.read.parquet(pipe.main_path)
+        return int(main.filter(F.col("c_nationkey") == key).agg(F.avg("o_totalprice")).first()[0])
+
+    ingest((1000.0, 400000.0))
+    assert pipe.calc_avg(5).source == "create"
+    held = pipe._cache()
+    assert pipe.calc_avg(5).source == "reuse" and pipe._cache() is held
+    wide = exact(5)
+
+    ingest((1000.0, 100000.0))
+    pipe.invalidate_cache()
+    res = pipe.calc_avg(5)
+    assert pipe._cache() is not held
+    assert res.source == "create" and res.avg == exact(5) != wide
+
+
 def test_salted_join_equals_plain_join(spark):
     from pyspark.sql import functions as F
 
@@ -189,6 +292,11 @@ def test_cache_warm_all_layout_is_partition_pruned(spark):
     # The equality filter must prune at the partition level, not scan+filter.
     assert "PartitionFilters" in plan and "c_nationkey" in plan.split("PartitionFilters", 1)[1][:200]
     assert df.count() == cache.main.filter(F.col(cache.key_col) == 5).count()
+    # warm_all commits every key, so the per-key state machine reuses it.
+    warm = cache.calc_avg(5)
+    assert warm.source == "reuse" and warm.error == ""
+    expected = cache.main.filter(F.col(cache.key_col) == 5).agg(F.avg(cache.value_col)).first()[0]
+    assert warm.avg == int(expected)
 
 
 def test_foreach_batch_exactly_once_sink(spark):

@@ -6,8 +6,11 @@ length-prefixed value hashing — the round-8 VERDICT/ADVICE items."""
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import functions as F
+
+TOOLS = Path(__file__).resolve().parent.parent / "tools"
 
 
 class TestTxlogRelocatable:
@@ -408,13 +411,13 @@ class TestSweepDigest:
         import importlib.util
 
         spec = importlib.util.spec_from_file_location(
-            "digestlib_probe", "/root/repo/tools/digestlib.py"
+            "digestlib_probe", TOOLS / "digestlib.py"
         )
         mod = importlib.util.module_from_spec(spec)
         spec.loader.exec_module(mod)
         d = mod.digest
         # full_sweep must still route through the shared definition.
-        src = open("/root/repo/tools/full_sweep.py").read()
+        src = (TOOLS / "full_sweep.py").read_text()
         assert "from digestlib import digest" in src
         assert "def _digest" not in src
         assert d([("a\x1fb",)]) != d([("a", "b")])

@@ -227,3 +227,37 @@ def test_three_verbs_over_proto_wire(service):
     # In-band error shape survives the proto transport (defaults filled).
     missing = proto_client.calc_avg_loan(9999)
     assert missing["avg_loan"] == 0 and missing["source"] == "" and missing["error"]
+
+
+def test_proto_client_in_fresh_process(service):
+    """LenderHttpClient(wire="proto") must work in a process that has
+    not imported protobuf yet: the client installs the _vendor shim
+    itself before it imports google.protobuf."""
+    import json
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    from data_pipeline_with_hdfs_sql_integration_spark.lender_pb import (
+        protobuf_available,
+    )
+
+    if not protobuf_available():
+        pytest.skip("no protobuf runtime on this host")
+    _, client = service
+    client.db_to_hdfs()
+    want = client.calc_avg_loan(5)
+    code = (
+        "import json, sys; sys.path.insert(0, sys.argv[1]); "
+        "from data_pipeline_with_hdfs_sql_integration_spark.service import LenderHttpClient; "
+        "print(json.dumps(LenderHttpClient(int(sys.argv[2]), wire='proto').calc_avg_loan(5)))"
+    )
+    repo = Path(__file__).resolve().parent.parent
+    port = client.base.rsplit(":", 1)[1]
+    r = subprocess.run(
+        [sys.executable, "-c", code, str(repo), port],
+        capture_output=True, text=True, timeout=120,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    got = json.loads(r.stdout.strip().splitlines()[-1])
+    assert got == {"avg_loan": want["avg_loan"], "source": "reuse", "error": ""}

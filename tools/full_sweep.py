@@ -13,15 +13,16 @@ scrub) compare even at sf10 where their multi-million-row results
 made exact collection a harness limitation, never an engine one.
 Value semantics are IDENTICAL to the exact mode (same per-value str()
 forms, multiset equality via the hash sum)."""
-import sys, time; sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+import os as _os, sys, time
+_TOOLS = _os.path.dirname(_os.path.abspath(__file__))
+sys.path.insert(0, _os.path.dirname(_TOOLS))
+sys.path.insert(0, _TOOLS)
 from busy import claim as _claim
 # Pidfile handshake (round-11 lesson): declare this process as a
 # box-owning workload so bench.py refuses to time queries while the
 # sweep runs — a sweep racing the driver's bench contaminated BENCH_r11.
 _claim("sweep")
 from pyspark.sql import SparkSession
-import os as _os
 _cpus = _os.environ.get("SWEEP_CPUS", "16")
 spark = (SparkSession.builder.master(f"local[{_cpus}]")
          .config("spark.sql.shuffle.partitions", _cpus)

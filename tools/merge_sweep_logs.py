@@ -6,10 +6,11 @@ A query may appear in several logs (processes race toward each other);
 any FAIL wins over OK so a real divergence can never be masked by a
 duplicate pass elsewhere.
 """
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from data_pipeline_with_hdfs_sql_integration_spark.registry import all_queries  # noqa: E402
 
