@@ -356,29 +356,20 @@ def main() -> None:
         if os.environ.get("SPARK_GRAFT_BENCH_COLD", "1") != "0" and not (
             spark._jsparkSession.sharedState().cacheManager().isEmpty()
         ):
-            from data_pipeline_with_hdfs_sql_integration_spark.operators.global_rank import (
-                release_pins,
-            )
-
-            release_pins()
-            spark.catalog.clearCache()
+            catalog.release_all(spark)
             cold_df = specs[name].fn(spark, SF_DIR)
             cold_s[name] = round(
                 _time(lambda: cold_df.write.format("noop").mode("overwrite").save()), 4
             )
-        # Queries persist intermediates and (by design) never unpersist
-        # — across 79 queries the leftovers accumulate into eviction/GC
-        # churn that slowed the whole round-5 session ~31%. Clearing
-        # between queries bounds cached memory at one query's working
-        # set; each query's own warmup re-materializes what it needs
-        # (memo_persist re-persists shared bases on demand), so the
-        # timed run still measures the warm path. release_pins drops
-        # the Python-side persist handles the global-rank two-phase
-        # operators register (ADVICE round 9).
-        from data_pipeline_with_hdfs_sql_integration_spark.operators.global_rank import release_pins
-
-        release_pins()
-        spark.catalog.clearCache()
+        # Query-scoped pins (catalog.pin) and memo entries outlive the
+        # query function — across 79 queries the leftovers would
+        # accumulate into eviction/GC churn (round 5: the whole session
+        # ~31% slower). release_all unpersists every pin and clears the
+        # cache, bounding cached memory at one query's working set;
+        # memo_persist re-persists shared bases on demand, so each
+        # query's warmup re-materializes what it needs and the timed run
+        # still measures the warm path.
+        catalog.release_all(spark)
     spark.sparkContext.setJobDescription(None)
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]

@@ -10,6 +10,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.storagelevel import StorageLevel
 
 TABLES = (
     "region",
@@ -57,25 +58,36 @@ def _conf_bytes(spark: SparkSession, key: str, default: int) -> int:
 def _estimated_scan_splits(spark: SparkSession, path: str) -> int:
     """Driver-side estimate of the scan's partition count from the file
     listing alone — no plan-to-RDD conversion, no job. Mirrors Spark's
-    FilePartition bin-packing: files are chunked at maxPartitionBytes
-    and packed with an openCostInBytes surcharge per file."""
+    FilePartition: the split size is maxPartitionBytes, lowered to the
+    bytes-per-core share of the input (never below openCostInBytes);
+    each file is chunked at that size, and the chunks are packed
+    largest-first, a split closing when the next chunk would overflow
+    it. The open cost is charged per chunk only while packing."""
     max_bytes = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
     open_cost = _conf_bytes(spark, "spark.sql.files.openCostInBytes", 4 << 20)
-    total = 0
-    n_files = 0
     if os.path.isdir(path):
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                if f.startswith(("_", ".")):
-                    continue
-                total += os.path.getsize(os.path.join(root, f))
-                n_files += 1
+        sizes = [
+            os.path.getsize(os.path.join(root, f))
+            for root, _dirs, files in os.walk(path)
+            for f in files
+            if not f.startswith(("_", "."))
+        ]
     elif os.path.exists(path):
-        total = os.path.getsize(path)
-        n_files = 1
+        sizes = [os.path.getsize(path)]
     else:  # non-local path (hdfs://, s3://...) — let Spark answer
         return -1
-    return max(1, -(-(total + n_files * open_cost) // max_bytes))
+    per_core = sum(s + open_cost for s in sizes) // spark.sparkContext.defaultParallelism
+    split = max(1, min(max_bytes, max(open_cost, per_core)))
+    chunks = sorted(
+        (min(split, s - off) for s in sizes for off in range(0, s, split)), reverse=True
+    )
+    splits, current = 0, None
+    for c in chunks:
+        if current is not None and current + c > split:
+            splits += 1
+            current = None
+        current = (current or 0) + c + open_cost
+    return max(1, splits + (current is not None))
 
 
 def table_on_disk_bytes(sf_dir: str, name: str) -> int:
@@ -185,6 +197,48 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
+# Persisted intermediates. This module is the only place a DataFrame is
+# persisted, always at MEMORY_AND_DISK, under one of two lifetimes:
+# memo_persist (session scope, below) or pin (query scope). The plans
+# that reference a pinned frame NEED the persist (range boundaries are
+# sampled per job; a self-join would otherwise re-run the whole lineage
+# on each side), so the code that builds it cannot unpersist eagerly;
+# instead every pin is registered in _PINS and a long-lived session
+# (bench loop, registry sweep) calls release_all between queries, once
+# the previous query's plan is fully consumed. That bounds cached memory
+# at one query's working set.
+_PINS: list[DataFrame] = []
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """Persist ``df`` for the current query and return it."""
+    df.persist(StorageLevel.MEMORY_AND_DISK)
+    _PINS.append(df)
+    return df
+
+
+def release_pins() -> int:
+    """Unpersist every intermediate pinned since the last call; returns
+    how many were released. Call ONLY between queries — a plan that
+    references a pinned frame must be fully consumed first."""
+    n = len(_PINS)
+    for df in _PINS:
+        try:
+            df.unpersist()
+        except Exception:  # session already stopped — nothing to free
+            pass
+    _PINS.clear()
+    return n
+
+
+def release_all(spark: SparkSession) -> None:
+    """Between-query reset: release the query-scoped pins, then drop
+    every cached relation (memo_persist re-persists its entries on the
+    next access)."""
+    release_pins()
+    spark.catalog.clearCache()
+
+
 # One persisted copy per (application, key) for derived frames that
 # MANY queries re-derive identically (the hashed-token/shingle base,
 # parsed vector tables). Without the memo, every query call stacks a
@@ -212,8 +266,6 @@ def memo_persist(spark: SparkSession, key: tuple, build) -> DataFrame:
     a lock for concurrent query builds (only the dict bookkeeping —
     `build()` runs outside the lock; a racing duplicate build loses
     the insert and its frame is simply never persisted)."""
-    from pyspark.storagelevel import StorageLevel
-
     app_id = spark.sparkContext.applicationId
     full_key = (app_id, *key)
     with _MEMO_LOCK:

@@ -32,36 +32,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-#: Persisted intermediates pinned by the operators below. The returned
-#: plans NEED the pin (range boundaries are sampled per job — an
-#: unpersisted intermediate could re-rank against different
-#: boundaries), so the operator cannot unpersist eagerly; instead every
-#: pin is registered here and a long-lived session (bench loop, the
-#: 256-query sweep) calls :func:`release_pins` between queries, once
-#: the previous query's plan is fully consumed.
-_PINS: list[DataFrame] = []
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    from pyspark.storagelevel import StorageLevel
-
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-    _PINS.append(df)
-    return df
-
-
-def release_pins() -> int:
-    """Unpersist every intermediate pinned since the last call; returns
-    how many were released. Call ONLY between queries — a plan returned
-    by these operators must be fully consumed first."""
-    n = len(_PINS)
-    for df in _PINS:
-        try:
-            df.unpersist()
-        except Exception:  # session already stopped — nothing to free
-            pass
-    _PINS.clear()
-    return n
+# The pin registry lives in catalog; re-exported for callers that
+# import it from here.
+from data_pipeline_with_hdfs_sql_integration_spark.catalog import (  # noqa: F401
+    _PINS,
+    pin,
+    release_pins,
+)
 
 
 def global_row_number(
@@ -74,7 +51,7 @@ def global_row_number(
 
     Triggers one Spark job (the per-partition count pull) and pins the
     ranked intermediate for the caller's downstream job — the pin is
-    registered in :data:`_PINS`; long-lived sessions release it via
+    registered in catalog's :data:`_PINS`; long-lived sessions release it via
     :func:`release_pins` between queries.
     """
     sort_cols = [
@@ -84,7 +61,7 @@ def global_row_number(
         "_gr_pid", F.spark_partition_id()
     )
     w = Window.partitionBy("_gr_pid").orderBy(*sort_cols)
-    loc = _pin(rp.withColumn("_gr_r", F.row_number().over(w)))
+    loc = pin(rp.withColumn("_gr_r", F.row_number().over(w)))
     counts = {
         row["_gr_pid"]: row["cnt"]
         for row in loc.groupBy("_gr_pid").agg(F.count("*").alias("cnt")).collect()
@@ -138,7 +115,7 @@ def global_prefix_max(
         .orderBy(*sort_cols)
         .rowsBetween(Window.unboundedPreceding, -1 if exclusive else 0)
     )
-    loc = _pin(rp.withColumn(alias, F.max(col).over(w)))
+    loc = pin(rp.withColumn(alias, F.max(col).over(w)))
     maxima = {
         row["_gm_pid"]: row["m"]
         for row in loc.groupBy("_gm_pid")
@@ -199,7 +176,7 @@ def global_prefix_sum(
         .orderBy(*sort_cols)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    loc = _pin(
+    loc = pin(
         rp.select(
             "*",
             *[F.sum(col).over(w).alias(alias) for alias, col in sums.items()],

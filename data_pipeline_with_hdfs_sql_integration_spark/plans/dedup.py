@@ -26,23 +26,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from data_pipeline_with_hdfs_sql_integration_spark.catalog import load, load_parallel
+from data_pipeline_with_hdfs_sql_integration_spark.catalog import load, load_parallel, pin
 from data_pipeline_with_hdfs_sql_integration_spark.functions import textfns as tf
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
 from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
-
-def _materialize(df: DataFrame) -> DataFrame:
-    """Persist a (small, derived) table that feeds a self-join.
-
-    Without this, both sides of the self-join re-run the whole hash
-    lineage — Spark's exchange reuse does not fire across the differing
-    a/b projections. Signatures are tiny next to raw text (the 100 TB
-    ratio is even more lopsided), so MEMORY_AND_DISK is safe at scale.
-    """
-    from pyspark.storagelevel import StorageLevel
-
-    return df.persist(StorageLevel.MEMORY_AND_DISK)
-
 
 JACCARD_THRESHOLD = 0.5
 MINHASH_EST_THRESHOLD = 0.5
@@ -181,11 +168,9 @@ def _sh_select(base: DataFrame) -> DataFrame:
 def _shingles_of(docs: DataFrame) -> DataFrame:
     """(doc_id, sh) from any (doc_id, text, ...) frame — the df-based
     core of _shingle_hashes, reused by the streaming ingestion gate on
-    per-micro-batch frames (those are transient, so a plain persist —
+    per-micro-batch frames (those are transient, so a query-scoped pin —
     not the session memo — is correct here)."""
-    from pyspark.storagelevel import StorageLevel
-
-    base = _token_base(docs).persist(StorageLevel.MEMORY_AND_DISK)
+    base = pin(_token_base(docs))
     return _sh_select(base)
 
 
@@ -292,7 +277,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # token-hash array inlined by CollapseProject) re-computes per
     # emitted element: measured 73 s cold at sf0.1 vs 1.4 s with the
     # barrier. The pair table is (id, long) — tiny next to raw text.
-    ex = _materialize(raw.select("doc_id", F.explode("sh").alias("h")))
+    ex = pin(raw.select("doc_id", F.explode("sh").alias("h")))
     dfc = ex.groupBy("h").agg(F.count("*").alias("df"))
     ordered = (
         ex.join(dfc, "h")
@@ -304,7 +289,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n"),
         )
     )
-    sh = _materialize(ordered)
+    sh = pin(ordered)
     prefix_len = (F.col("n") - F.ceil(F.col("n") * t) + 1).cast("int")
     # The prefix index ships ONLY (doc_id, n, h) — never the shingle
     # arrays. Candidate pairs dedup as bare id pairs, then the arrays
@@ -827,7 +812,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_with_hdfs_sql_integration_spark.streaming import windows as W
 
     apply_runtime_confs(spark)
-    index_bands = _materialize(
+    index_bands = pin(
         _minhash_bands(
             minhash_signature_store(spark, sf_dir).filter(F.col("doc_id") % INCR_NEW_MOD != 0)
         ).select(
@@ -990,7 +975,10 @@ def _simhash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     apply_runtime_confs(spark)
-    sh = _materialize(_simhash_df(spark, sf_dir))
+    # Pinned: both sides of the band self-join read it, and exchange
+    # reuse does not fire across the differing a/b projections, so an
+    # unpinned frame re-runs the whole fingerprint lineage per side.
+    sh = pin(_simhash_df(spark, sf_dir))
     band_vals = F.array(
         *[F.shiftright(F.col("simhash"), 10 * j).bitwiseAND(F.lit(1023)) for j in range(tf.SIMHASH_BANDS)]
     )
@@ -1076,7 +1064,7 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_simhash_pairs_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     apply_runtime_confs(spark)
-    sh = _materialize(_simhash_df(spark, sf_dir))
+    sh = pin(_simhash_df(spark, sf_dir))
     band_vals = F.array(
         *[F.shiftright(F.col("simhash"), 10 * j).bitwiseAND(F.lit(1023)) for j in range(tf.SIMHASH_BANDS)]
     )
@@ -1272,7 +1260,7 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     apply_runtime_confs(spark)
     docs = _docs_parallel(spark, sf_dir)
     th = F.transform(tf.tokens(F.col("text")), lambda s: tf.poly_hash_str(s))
-    base = _materialize(
+    base = pin(
         docs.select("doc_id", th.alias("th")).filter(F.size("th") >= SPAN_NGRAM)
     )
 

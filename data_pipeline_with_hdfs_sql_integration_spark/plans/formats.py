@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
+from data_pipeline_with_hdfs_sql_integration_spark.catalog import load, pin
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
 from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
@@ -439,12 +439,11 @@ def format_csv_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f.write(f"{i},not_a_number\n")  # poisons the LONG column
             else:
                 f.write(f"{i},{i * 7}\n")
-    perm = (
+    perm = pin(
         spark.read.schema("i long, v long, _corrupt_record string")
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .csv(path)
-        .cache()
     )
     good = perm.filter(F.col("_corrupt_record").isNull()).agg(
         F.lit("permissive_good").alias("metric"),

@@ -23,8 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
-from data_pipeline_with_hdfs_sql_integration_spark.operators.global_rank import _pin
+from data_pipeline_with_hdfs_sql_integration_spark.catalog import load, pin
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
 from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
@@ -94,7 +93,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The distinct edge relation drives every round AND both union
     # branches below — persist it (one dedup shuffle total); the
     # direction-doubling union stays a cheap map over the cache.
-    edges = _pin(
+    edges = pin(
         li.select(F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s")).distinct()
     )
     e2 = edges.select(F.col("p").alias("src"), (F.col("s") + SUPP_OFFSET).alias("dst")).unionAll(
@@ -117,7 +116,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         # O(iters) (storage that a sweep-length session would otherwise
         # accrete; the cost is one count job per round over work the
         # round computes anyway).
-        ranks = _pin(ranks)
+        ranks = pin(ranks)
         ranks.count()
         if prev is not None:
             prev.unpersist(blocking=False)
@@ -273,7 +272,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # wedge + closing joins — persist both or the expensive co-supply
     # aggregate re-runs once per reference (measured 50 s -> ~8 s at
     # sf0.1).
-    ps = _pin(
+    ps = pin(
         li.select(F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s")).distinct()
     )
     a = ps.alias("a")
@@ -287,7 +286,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         Window.partitionBy("src").orderBy(F.col("shared").desc(), F.col("dst").asc())
     )
     topk = w.select("src", "dst", rk.alias("rk")).filter(F.col("rk") <= TRI_KNN)
-    und = _pin(
+    und = pin(
         topk.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
         .distinct()
     )
@@ -314,7 +313,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("ord_dst"),
         )
     )
-    oriented = _pin(oriented)
+    oriented = pin(oriented)
     e1 = oriented.alias("e1")
     e2 = oriented.alias("e2")
     wedges = e1.join(

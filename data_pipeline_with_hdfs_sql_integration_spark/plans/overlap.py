@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_pipeline_with_hdfs_sql_integration_spark.catalog import load_parallel
+from data_pipeline_with_hdfs_sql_integration_spark.catalog import load_parallel, pin
 from data_pipeline_with_hdfs_sql_integration_spark.functions import textfns as tf
 from data_pipeline_with_hdfs_sql_integration_spark.plans.dedup import (
     SQL_MINHASH_PAIRS_CTES,
@@ -225,7 +225,7 @@ def dedup_winnowing_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     apply_runtime_confs(spark)
     docs = load_parallel(spark, sf_dir, "documents")
     # Referenced by both the df-ceiling aggregate and the pair join.
-    fp = _winnow_fp_rows(docs).select("doc_id", "fp_hash").distinct().persist()
+    fp = pin(_winnow_fp_rows(docs).select("doc_id", "fp_hash").distinct())
     keep = (
         fp.groupBy("fp_hash")
         .agg(F.count("*").alias("df"))

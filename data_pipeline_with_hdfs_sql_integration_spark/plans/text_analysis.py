@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_pipeline_with_hdfs_sql_integration_spark.catalog import load, load_parallel
+from data_pipeline_with_hdfs_sql_integration_spark.catalog import load, load_parallel, pin
 from data_pipeline_with_hdfs_sql_integration_spark.functions import textfns as tf
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
 from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
@@ -327,6 +327,7 @@ def text_bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_parallel(spark, sf_dir, "documents")
     chars = F.filter(F.split(F.col("tok"), ""), lambda x: x != "")
     # The ONLY full-corpus pass: token occurrences -> (distinct word, freq).
+    # Function-scoped persist: every round's frame is unpersisted here.
     words = (
         docs.select(F.explode(tf.tokens(F.col("text"))).alias("tok"))
         .filter(F.length("tok") >= 2)
@@ -730,8 +731,6 @@ PHRASE_W1, PHRASE_W2 = "table", "scan"
     tags=("text", "search"),
 )
 def search_phrase_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.storagelevel import StorageLevel
-
     apply_runtime_confs(spark)
     docs = load_parallel(spark, sf_dir, "documents")
     pos = docs.select(
@@ -741,9 +740,7 @@ def search_phrase_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # barrier each branch re-scans and re-tokenizes the whole corpus
     # (measured 2 scans in the plan); with it the corpus is tokenized
     # once and only the tiny posting table is read twice.
-    pos_f = pos.filter(F.col("token").isin(PHRASE_W1, PHRASE_W2)).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    pos_f = pin(pos.filter(F.col("token").isin(PHRASE_W1, PHRASE_W2)))
     a = pos_f.filter(F.col("token") == PHRASE_W1).select("doc_id", "pos")
     b = pos_f.filter(F.col("token") == PHRASE_W2).select(
         "doc_id", (F.col("pos") - 1).alias("pos")
@@ -1136,12 +1133,10 @@ def pipeline_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("s_fr") == best, "fr")
         .otherwise("zh")
     )
-    from pyspark.storagelevel import StorageLevel
-
     # Slim survivor projection, persisted: BOTH consumers (the dedup
     # aggregate and the manifest join-back) read ~50 bytes/doc from
     # cache instead of re-running the tokenize+langid lineage.
-    gated = (
+    gated = pin(
         scored.filter(
             (F.col("n_tokens") >= MIN_TOKENS)
             & (F.col("n_tokens") <= MAX_TOKENS)
@@ -1154,7 +1149,6 @@ def pipeline_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_tokens",
             F.lower(F.sha2(F.col("text"), 256)).alias("h"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     deduped = gated.groupBy("h").agg(F.min("doc_id").alias("doc_id"))
     return (

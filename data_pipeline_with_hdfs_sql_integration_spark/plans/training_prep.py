@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from data_pipeline_with_hdfs_sql_integration_spark.catalog import load_parallel
+from data_pipeline_with_hdfs_sql_integration_spark.catalog import load_parallel, pin
 from data_pipeline_with_hdfs_sql_integration_spark.functions import textfns as tf
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
 from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
@@ -134,15 +134,9 @@ def _gram_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     the eval branch alone). The persisted hash table is tiny next to
     raw text, and both the eval and corpus branches read from it.
     """
-    from pyspark.storagelevel import StorageLevel
-
     docs = load_parallel(spark, sf_dir, "documents")
     th = F.transform(tf.tokens(F.col("text")), lambda s: tf.poly_hash_str(s))
-    base = (
-        docs.select("doc_id", th.alias("th"))
-        .filter(F.size("th") >= CONTAM_NGRAM)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    base = pin(docs.select("doc_id", th.alias("th")).filter(F.size("th") >= CONTAM_NGRAM))
 
     def _g5(i):
         acc = F.get(F.col("th"), i)
@@ -396,20 +390,20 @@ MIX_BUDGET_DIV = 2  # budget = total corpus tokens // 2
     tags=("training", "mixing"),
 )
 def mix_weighted_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.storagelevel import StorageLevel
-
     apply_runtime_confs(spark)
     docs = load_parallel(spark, sf_dir, "documents")
     # Persisted barrier: the metadata table feeds BOTH the corpus-total
     # aggregate and the per-language window — without it each branch
     # re-tokenizes the whole corpus (measured 2 scans in the plan).
     # ~24 bytes/doc, trivially cacheable at any corpus size.
-    d = docs.select(
-        "doc_id",
-        "lang",
-        F.size(tf.tokens(F.col("text"))).cast("long").alias("n_tok"),
-        ((F.col("doc_id").cast("long") * _KNUTH) % _H_MOD).alias("hkey"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    d = pin(
+        docs.select(
+            "doc_id",
+            "lang",
+            F.size(tf.tokens(F.col("text"))).cast("long").alias("n_tok"),
+            ((F.col("doc_id").cast("long") * _KNUTH) % _H_MOD).alias("hkey"),
+        )
+    )
     tot = d.agg(F.sum("n_tok").alias("total"))
     w = F.broadcast(
         docs.sparkSession.createDataFrame(
@@ -807,16 +801,16 @@ def mix_entropy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("training", "mixing"),
 )
 def mix_temperature_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.storagelevel import StorageLevel
-
     apply_runtime_confs(spark)
     docs = load_parallel(spark, sf_dir, "documents")
-    d = docs.select(
-        "doc_id",
-        "lang",
-        F.size(tf.tokens(F.col("text"))).cast("long").alias("n_tok"),
-        ((F.col("doc_id").cast("long") * _KNUTH) % _H_MOD).alias("hkey"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    d = pin(
+        docs.select(
+            "doc_id",
+            "lang",
+            F.size(tf.tokens(F.col("text"))).cast("long").alias("n_tok"),
+            ((F.col("doc_id").cast("long") * _KNUTH) % _H_MOD).alias("hkey"),
+        )
+    )
     tot = d.agg(F.sum("n_tok").alias("total"))
     wts = d.groupBy("lang").agg(
         F.floor(F.sqrt(F.sum("n_tok").cast("double")) * 1000).cast("long").alias("w_milli")

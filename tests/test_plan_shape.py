@@ -228,17 +228,40 @@ def test_token_hash_tables_have_materialization_barrier(spark):
     behind a persist barrier: CollapseProject otherwise inlines the full
     char-level hash computation into every per-position array reference
     — O(k*n) re-hashes of the whole document, quadratic in doc length
-    (measured 73 s vs 1.5 s cold at sf0.1). InMemoryRelation in the
-    analyzed plan is the witness that the barrier exists."""
+    (measured 73 s vs 1.5 s cold at sf0.1). The tables that feed more
+    than one consumer (dedup_ngram_jaccard's exploded pairs `ex` and
+    ordered shingles `sh`, sim_ann_lsh's signatures `sigs`) need the
+    same barrier. InMemoryRelation in the optimized plan is the witness
+    that the barrier exists."""
+    from data_pipeline_with_hdfs_sql_integration_spark import catalog
     from data_pipeline_with_hdfs_sql_integration_spark.plans.dedup import _shingle_hashes
     from data_pipeline_with_hdfs_sql_integration_spark.plans.training_prep import _gram_hashes
+    from data_pipeline_with_hdfs_sql_integration_spark.registry import all_queries
 
-    for df in (_shingle_hashes(spark, SF_DIR), _gram_hashes(spark, SF_DIR)):
-        # Cache substitution happens post-analysis: the optimized plan
-        # shows InMemoryRelation where the persisted hash table sits.
-        assert "InMemoryRelation" in str(df._jdf.queryExecution().optimizedPlan()), (
-            "token-hash table lost its persist barrier"
-        )
+    def pins_of(name: str) -> dict:
+        """The frames query `name` pins, keyed by their columns."""
+        n = len(catalog._PINS)
+        all_queries()[name].fn(spark, SF_DIR)
+        return {tuple(df.columns): df for df in catalog._PINS[n:]}
+
+    catalog.release_pins()
+    ngram, lsh = pins_of("dedup_ngram_jaccard"), pins_of("sim_ann_lsh")
+    inputs = [
+        _shingle_hashes(spark, SF_DIR),
+        _gram_hashes(spark, SF_DIR),
+        ngram[("doc_id", "sh", "n")],
+        ngram[("doc_id", "h")],
+        lsh[("vec_id", "v", "sig_lo", "sig_hi")],
+    ]
+    try:
+        for df in inputs:
+            # Cache substitution happens post-analysis: the optimized plan
+            # shows InMemoryRelation where the persisted table sits.
+            assert "InMemoryRelation" in str(df._jdf.queryExecution().optimizedPlan()), (
+                f"{df.columns} lost its persist barrier"
+            )
+    finally:
+        catalog.release_pins()
 
 
 def test_scd2_windows_share_one_sort(spark):

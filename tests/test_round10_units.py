@@ -5,10 +5,10 @@
    before a racing evolve), ConcurrentAppend (merge/overwrite racing an
    append that their full-table read never saw), and the session-
    timezone normalization of timestamp pruning bounds.
-2. graph query cache hygiene: a sweep-length session must not accrete
-   persisted relations — every persist in plans/graph.py is either
-   released per Pregel round or registered in the pin registry that
-   bench/sweep loops drain between queries.
+2. query cache hygiene: a sweep-length session must not accrete
+   persisted relations — every query-scoped persist is either released
+   inside the query (graph's Pregel rounds) or registered in the pin
+   registry that bench/sweep loops drain between queries.
 """
 from __future__ import annotations
 
@@ -242,33 +242,43 @@ def test_ivf2_fine_cells_scale_with_corpus(spark):
     assert n == joined and n > 0
 
 
-# ---------------------------------------------------- graph cache hygiene
-def test_graph_queries_release_all_persists(spark):
+# ---------------------------------------------------- query cache hygiene
+@pytest.mark.parametrize(
+    "name",
+    [
+        "graph_pagerank",
+        "graph_triangle_count",
+        "dedup_ngram_jaccard",
+        "sim_ann_lsh",
+        "mix_temperature_sampling",
+        "dedup_winnowing_overlap",
+    ],
+)
+def test_graph_queries_release_all_persists(spark, name):
     """A sweep-length session shows no monotone growth in persisted
-    relations: after consuming each graph query and draining the pin
-    registry (what bench.py / full_sweep.py do between queries), the
-    JVM's persistent-RDD map returns to its baseline."""
-    from data_pipeline_with_hdfs_sql_integration_spark.operators.global_rank import (
-        release_pins,
-    )
-    from data_pipeline_with_hdfs_sql_integration_spark.plans.graph import (
-        graph_pagerank,
-        graph_triangle_count,
-    )
+    relations: after consuming a query and draining the pin registry
+    (what bench.py / full_sweep.py do between queries), the only cached
+    relations left are session-scoped memo_persist entries, and the
+    JVM's persistent-RDD map returns to its baseline once those go."""
+    from data_pipeline_with_hdfs_sql_integration_spark import catalog
+    from data_pipeline_with_hdfs_sql_integration_spark.registry import all_queries
 
     def n_persisted() -> int:
         return spark.sparkContext._jsc.getPersistentRDDs().size()
 
-    release_pins()
-    spark.catalog.clearCache()
+    catalog.release_all(spark)
     base = n_persisted()
-    for fn in (graph_pagerank, graph_triangle_count):
-        name = fn.__name__
-        fn(spark, SF_DIR).collect()
+    all_queries()[name].fn(spark, SF_DIR).collect()
+    if name.startswith("graph_"):
         # Mid-flight accounting for the Pregel chain: per-round release
         # keeps cached generations O(1), never O(PR_ITERS) + O(queries).
         assert n_persisted() - base <= 4, f"{name} accreted persisted RDDs"
-        release_pins()
+    catalog.release_pins()
+    for memo in catalog._MEMO_PERSIST.values():
+        memo.unpersist()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
+        f"{name} left a persist that release_pins does not free"
+    )
     assert n_persisted() <= base
 
 

@@ -43,12 +43,10 @@ for name in names:
     for _ in range(3):
         t0 = time.monotonic(); run(); ts.append(round(time.monotonic() - t0, 4))
     out[name] = ts
-    spark.catalog.clearCache()
     try:
-        from data_pipeline_with_hdfs_sql_integration_spark.operators.global_rank import release_pins
-        release_pins()
-    except Exception:
-        pass
+        catalog.release_all(spark)
+    except AttributeError:  # older trees predate catalog.release_all
+        spark.catalog.clearCache()
 print("ABRESULT " + json.dumps(out))
 """
 

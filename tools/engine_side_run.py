@@ -18,6 +18,7 @@ sys.path.insert(0, REPO)
 from pyspark.sql import SparkSession
 
 import __spark_entry__ as e  # noqa: E402
+from data_pipeline_with_hdfs_sql_integration_spark import catalog  # noqa: E402
 
 qs = e.queries()
 SF = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, ".localdata", "sf10")
@@ -71,8 +72,5 @@ for name in names:
     except Exception as ex:
         print(f"ENGINE-FAIL {name}: {str(ex)[:160]}", flush=True)
     finally:
-        from data_pipeline_with_hdfs_sql_integration_spark.operators.global_rank import release_pins
-
-        release_pins()
-        spark.catalog.clearCache()
+        catalog.release_all(spark)
 print("ENGINE-RUN done", flush=True)

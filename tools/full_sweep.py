@@ -38,6 +38,7 @@ spark = (SparkSession.builder.master(f"local[{_cpus}]")
          .config("spark.ui.enabled", "false").getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
 import __spark_entry__ as e
+from data_pipeline_with_hdfs_sql_integration_spark import catalog
 qs, os_ = e.queries(), e.oracle_sql()
 import duckdb
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
@@ -228,11 +229,9 @@ for name in _names:
                 sys.exit(3)
             break
         finally:
-            # Bound session memory like bench.py: drop the persist handles
-            # the global-rank operators pin and clear cached relations so
-            # 256 queries in one session don't accumulate eviction churn.
-            from data_pipeline_with_hdfs_sql_integration_spark.operators.global_rank import release_pins
-            release_pins()
-            spark.catalog.clearCache()
+            # Bound session memory like bench.py: release the query's
+            # pins and cached relations so 256 queries in one session
+            # don't accumulate eviction churn.
+            catalog.release_all(spark)
 print(f"SWEEP {SF}: {ok} ok / {bad} bad of {len(_names)} in {time.monotonic()-t_start:.0f}s")
 for f in fails: print(" FAIL:", f)

@@ -72,6 +72,7 @@ for k, v in shape["conf"].items():
 spark = b.config("spark.ui.enabled", "false").getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")
 import __spark_entry__ as e
+from data_pipeline_with_hdfs_sql_integration_spark import catalog
 from digestlib import digest
 qs = e.queries()
 out = {}
@@ -84,9 +85,7 @@ for name in names:
     proj = proj.repartition(int(shape["cpus"]))
     cnt, acc = digest(tuple(r) for r in proj.toLocalIterator(prefetchPartitions=True))
     out[name] = [cnt, acc]
-    spark.catalog.clearCache()
-    from data_pipeline_with_hdfs_sql_integration_spark.operators.global_rank import release_pins
-    release_pins()
+    catalog.release_all(spark)
 print("PROBE_RESULT " + json.dumps(out))
 """
 

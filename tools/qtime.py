@@ -22,6 +22,7 @@ def main() -> None:
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     args = ap.parse_args()
 
+    from data_pipeline_with_hdfs_sql_integration_spark import catalog
     from data_pipeline_with_hdfs_sql_integration_spark.registry import all_queries
     from data_pipeline_with_hdfs_sql_integration_spark.session import get_spark
 
@@ -38,13 +39,7 @@ def main() -> None:
             run()
             ts.append(round(time.monotonic() - t0, 4))
         print(f"{name}: min={min(ts):.4f} passes={ts}", flush=True)
-        spark.catalog.clearCache()
-        try:
-            from data_pipeline_with_hdfs_sql_integration_spark.operators.global_rank import release_pins
-
-            release_pins()
-        except Exception:
-            pass
+        catalog.release_all(spark)
 
 
 if __name__ == "__main__":

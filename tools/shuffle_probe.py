@@ -28,6 +28,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 import __spark_entry__ as e  # noqa: E402
+from data_pipeline_with_hdfs_sql_integration_spark import catalog  # noqa: E402
 
 qs = e.queries()
 SF = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, ".localdata", "sf10")
@@ -100,7 +101,4 @@ for name in requested:
     except Exception as ex:
         print(f"PROBE-FAIL {name}: {str(ex)[:200]}", flush=True)
     finally:
-        from data_pipeline_with_hdfs_sql_integration_spark.operators.global_rank import release_pins
-
-        release_pins()
-        spark.catalog.clearCache()
+        catalog.release_all(spark)
