@@ -10,6 +10,7 @@ without the gRPC deployment skin.
 from __future__ import annotations
 
 import threading
+import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -18,6 +19,7 @@ from pyspark.sql import functions as F
 from data_pipeline_with_hdfs_sql_integration_spark.operators.block_locations import block_histogram_dict
 from data_pipeline_with_hdfs_sql_integration_spark.operators.partition_cache import (
     CacheResult,
+    CacheStats,
     PartitionCache,
     delete_tree,
 )
@@ -33,7 +35,8 @@ class Pipeline:
     make same-key requests single-flight. The cache holds a DataFrame
     over main, and with it main's file listing, so ``db_to_store`` must
     be the only writer of ``main_path``: it drops the held cache before
-    it rewrites main.
+    it rewrites main. The caches share one ``CacheStats``, so the answer
+    counts in ``cache_stats`` span every version of main.
     """
 
     spark: SparkSession
@@ -51,6 +54,7 @@ class Pipeline:
     _held_lock: threading.Lock = field(
         default_factory=threading.Lock, init=False, repr=False, compare=False
     )
+    _stats: CacheStats = field(default_factory=CacheStats, init=False, repr=False, compare=False)
 
     def db_to_store(
         self,
@@ -114,11 +118,24 @@ class Pipeline:
                     self.value_col,
                     self.cache_root,
                     replication=self.cache_replication,
+                    stats=self._stats,
                 )
             return self._held
 
     def calc_avg(self, key: object) -> CacheResult:
-        return self._cache().calc_avg(key)
+        start = time.perf_counter()
+        try:
+            cache = self._cache()
+        except Exception:
+            # No main to serve from yet: still an answered request.
+            self._stats.record("error", time.perf_counter() - start, False)
+            raise
+        return cache.calc_avg(key)
+
+    def cache_stats(self) -> dict:
+        """CalcAvgLoan answers per outcome with their total seconds, and
+        the requests that waited on a key's lock (``CacheStats``)."""
+        return self._stats.snapshot()
 
     def invalidate_cache(self) -> None:
         # What PartitionCache.invalidate does, without building the

@@ -11,11 +11,15 @@ Reference behavior (server.py:95-147, the CalcAvgLoan RPC):
   caught and returned as an error (server.py:145-147)
 
 Spark-native design: the cache is a Hive-style partitioned parquet
-layout ``cache_root/<key_col>=<k>/`` so a reuse-path read is a direct
-small-file scan (and a full-layout read gets partition pruning for
-free). Replication tiering (reference: 2× main, 1× cache —
-server.py:49 vs 135) is applied per write via the Hadoop FileSystem API
-when the storage supports it.
+layout ``cache_root/<key_col>=<k>/`` (so a full-layout read gets
+partition pruning for free). Like the reference (server.py:103-109), a
+reuse reads the committed partition in the driver and launches no Spark
+job: its data files are opened through the Hadoop FileSystem, which
+still verifies checksums (``.crc`` files on the local FS, block
+checksums on HDFS), and pyarrow decodes only the value column.
+Replication tiering (reference: 2× main, 1× cache — server.py:49 vs
+135) is applied per write via the Hadoop FileSystem API when the
+storage supports it.
 
 State machine of ``calc_avg(k)``, for a partition ``cache_root/<key_col>=<k>``:
 
@@ -23,42 +27,50 @@ State machine of ``calc_avg(k)``, for a partition ``cache_root/<key_col>=<k>``:
   holding only ``_temporary`` (a write in flight, or one that crashed)
   is not committed, so it takes the create path instead of answering
   "no rows" from an empty listing.
-- **reuse** (lock-free): a committed partition is read with the pinned
-  schema in one observed-avg job.
+- **reuse** (lock-free): a committed partition is read in the driver
+  and averaged like Spark's ``avg``.
 - **create**: nothing committed (server.py:113-116), also when the
   marker vanished during the read (an invalidate, or another writer).
 - **recreate**: the partition is still committed but unreadable (a
-  corrupt or lost file, server.py:118-121), or it reads zero rows —
+  corrupt or lost file, server.py:118-121), or it holds no value —
   its part files are gone, e.g. a lost DataNode.
 - create and recreate run under a per-key lock, so one key has at most
   one writer. A request that waited for the lock rereads the partition
   when another request rewrote it meanwhile, and answers ``reuse``.
 - a key with no rows in main gets an empty partition that is rolled
   back, never committed, and an in-band error (server.py:145-147).
+
+``CacheStats`` counts the answers by outcome, with their total seconds
+(the outcomes the reference's performance_analyzer.py measured).
 """
 
 from __future__ import annotations
 
 import logging
 import threading
+import time
 from dataclasses import dataclass
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _log = logging.getLogger(__name__)
 
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(Hadoop FileSystem, Path) for ``path``."""
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+#: Bytes per py4j read of a cache file. Py4J writes each answer through
+#: an 8192-character buffer; a longer answer (bytes travel base64
+#: encoded) leaves in two sends, and Nagle's algorithm holds the second
+#: until the client's delayed ACK: about 40 ms per read instead of
+#: 0.5 ms. 6000 bytes encode to 8000 characters.
+_READ_CHUNK = 6000
 
 
 def delete_tree(spark: SparkSession, path: str) -> None:
     """Recursively delete ``path`` (no-op when it does not exist)."""
-    fs, hpath = _hadoop_fs(spark, path)
-    fs.delete(hpath, True)
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    hpath.getFileSystem(spark._jsc.hadoopConfiguration()).delete(hpath, True)
 
 
 @dataclass
@@ -67,6 +79,30 @@ class CacheResult:
     avg: int  # 0 when error (reference returns 0 with error set)
     source: str  # "create" | "reuse" | "recreate" | "" on error
     error: str = ""
+
+
+class CacheStats:
+    """Answers per outcome (``create``/``reuse``/``recreate``/``error``)
+    with their total seconds, and ``waited``: requests that blocked on a
+    key's writer lock. One locked update per request."""
+
+    OUTCOMES = ("create", "reuse", "recreate", "error")
+
+    def __init__(self) -> None:
+        self._lock = threading.Lock()
+        self._count = dict.fromkeys(self.OUTCOMES, 0)
+        self._seconds = dict.fromkeys(self.OUTCOMES, 0.0)
+        self._waited = 0
+
+    def record(self, outcome: str, seconds: float, waited: bool) -> None:
+        with self._lock:
+            self._count[outcome] += 1
+            self._seconds[outcome] += seconds
+            self._waited += waited
+
+    def snapshot(self) -> dict:
+        with self._lock:
+            return {**self._count, "waited": self._waited, "seconds": dict(self._seconds)}
 
 
 class PartitionCache:
@@ -83,6 +119,9 @@ class PartitionCache:
     replication : int
         Desired HDFS replication for cache files (reference uses 1×;
         ignored on filesystems without replication, e.g. file://).
+    stats : CacheStats, optional
+        Where answers are counted; ``Pipeline`` shares one across the
+        caches it builds for successive versions of main.
     """
 
     def __init__(
@@ -93,6 +132,7 @@ class PartitionCache:
         value_col: str,
         cache_root: str,
         replication: int = 1,
+        stats: CacheStats | None = None,
     ) -> None:
         self.spark = spark
         self.main = main
@@ -100,10 +140,16 @@ class PartitionCache:
         self.value_col = value_col
         self.cache_root = cache_root.rstrip("/")
         self.replication = replication
-        # Partition files carry main's schema minus the key column; pin
-        # it so every reuse-path read skips driver-side schema inference
-        # (one footer read per calc_avg otherwise).
-        self._cache_schema = main.drop(key_col).schema
+        self.stats = stats or CacheStats()
+        # JVM handles looked up once: every FileSystem call below is one
+        # py4j round trip. The filter keeps the names Spark's reader
+        # reads: not starting with "_" (markers) or "." (checksums).
+        jvm = spark._jvm
+        self._Path = jvm.org.apache.hadoop.fs.Path
+        self._fs = self._Path(self.cache_root).getFileSystem(
+            spark._jsc.hadoopConfiguration()
+        )
+        self._data_files = jvm.org.apache.parquet.hadoop.util.HiddenFileFilter.INSTANCE
         # Per-partition-path writer locks and committed-write counts;
         # see the module docstring's state machine.
         self._locks: dict[str, threading.Lock] = {}
@@ -115,27 +161,29 @@ class PartitionCache:
         return f"{self.cache_root}/{self.key_col}={key}"
 
     # -- internals -----------------------------------------------------
-    def _avg_of(self, df: DataFrame) -> int | None:
-        """AVG truncated toward zero like Python int() (server.py:109).
+    def _read_avg(self, path: str) -> int | None:
+        """Spark's ``avg`` of the partition's ``value_col``, truncated
+        toward zero like Python int() (server.py:109); None when no
+        value is left (the NumPy-NaN analog).
 
-        Returns None for an empty input (NumPy-NaN analog).
-
-        Computed as an observed metric over a noop-sink pass — ONE
-        single-stage job (scan + running aggregate), mirroring the
-        create path's Observation ride-along. The previous
-        `.agg().collect()` planned a partial/final aggregate pair
-        around an Exchange, which AQE then ran as separate per-stage
-        jobs: ~2x the fixed per-job cost on every cache hit, and at
-        scale a (tiny but real) shuffle the observation never needs.
+        Spark's ``avg`` skips nulls, casts each value to double and sums
+        in row order, so this does the same over the data files' rows.
         """
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        df.observe(obs, F.avg(self.value_col).alias("a")).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        a = obs.get["a"]
-        return None if a is None else int(a)
+        arrays = []
+        for st in self._fs.listStatus(self._Path(path), self._data_files):
+            stream = self._fs.open(st.getPath())
+            try:
+                data = b"".join(iter(lambda: stream.readNBytes(_READ_CHUNK), b""))
+            finally:
+                stream.close()
+            col = pq.ParquetFile(pa.BufferReader(data)).read(columns=[self.value_col]).column(0)
+            arrays.append(col.drop_null().to_numpy().astype(np.float64))
+        values = np.concatenate(arrays) if arrays else np.empty(0)
+        if not len(values):
+            return None
+        # cumsum adds left to right; np.sum adds pairwise, which can
+        # differ from Spark's running sum in the last bit.
+        return int(float(np.cumsum(values)[-1]) / len(values))
 
     def _write_partition(self, subset: DataFrame, key: object) -> None:
         path = self.partition_path(key)
@@ -146,10 +194,9 @@ class PartitionCache:
 
     def _set_replication(self, path: str) -> None:
         try:
-            fs, hpath = _hadoop_fs(self.spark, path)
-            for st in fs.listStatus(hpath):
+            for st in self._fs.listStatus(self._Path(path)):
                 if st.isFile():
-                    fs.setReplication(st.getPath(), self.replication)
+                    self._fs.setReplication(st.getPath(), self.replication)
         except Exception:
             # Local fs treats replication as a no-op, but on a real
             # cluster a failed setReplication is a durability signal —
@@ -162,8 +209,7 @@ class PartitionCache:
         no Spark job, no exception-driven control flow (an
         AnalysisException probe pays a full JVM stack unwind per cache
         miss and floods the logs)."""
-        fs, hpath = _hadoop_fs(self.spark, f"{path}/_SUCCESS")
-        return bool(fs.exists(hpath))
+        return bool(self._fs.exists(self._Path(f"{path}/_SUCCESS")))
 
     def _key_lock(self, path: str) -> threading.Lock:
         with self._locks_guard:
@@ -177,14 +223,15 @@ class PartitionCache:
         if not self._committed(path):
             return "create"  # server.py:113-116
         try:
-            avg = self._avg_of(self.spark.read.schema(self._cache_schema).parquet(path))
+            avg = self._read_avg(path)
         except Exception:
+            _log.debug("reading %s failed", path, exc_info=True)
+            avg = None
+        if avg is None:
             # A corrupt or lost file leaves the marker: recreate
             # (server.py:118-121). An invalidate or a rewrite under the
             # read removed it: create (server.py:113-116).
             return "recreate" if self._committed(path) else "create"
-        if avg is None:
-            return "recreate"  # committed, but its part files are gone
         return CacheResult(key, avg, "reuse")
 
     def _recompute(self, key: object, source: str) -> CacheResult:
@@ -205,28 +252,45 @@ class PartitionCache:
         if a is None:
             # Reference: int(NaN) raises → error response (server.py:145-147).
             # Roll back the (empty) partition so the key stays a miss.
-            delete_tree(self.spark, path)
+            self._fs.delete(self._Path(path), True)
             return CacheResult(key, 0, "", f"no rows for {self.key_col}={key}")
         self._writes[path] = self._writes.get(path, 0) + 1
         return CacheResult(key, int(a), source)
 
-    # -- public API ----------------------------------------------------
-    def calc_avg(self, key: object) -> CacheResult:
-        """The CalcAvgLoan state machine (server.py:103-143); see the
-        module docstring."""
+    def _answer(self, key: object) -> tuple[CacheResult, bool]:
+        """calc_avg's result, and whether it waited on the key's lock."""
         path = self.partition_path(key)
         # Read before the probe: a write that commits after this point
         # changes the count, and a waiter below then rereads.
         seen = self._writes.get(path, 0)
         res = self._try_reuse(key)
         if isinstance(res, CacheResult):
-            return res
-        with self._key_lock(path):
+            return res, False
+        lock = self._key_lock(path)
+        waited = not lock.acquire(blocking=False)
+        if waited:
+            lock.acquire()
+        try:
             if self._writes.get(path, 0) != seen:
                 again = self._try_reuse(key)
                 if isinstance(again, CacheResult):
-                    return again
-            return self._recompute(key, res)
+                    return again, waited
+            return self._recompute(key, res), waited
+        finally:
+            lock.release()
+
+    # -- public API ----------------------------------------------------
+    def calc_avg(self, key: object) -> CacheResult:
+        """The CalcAvgLoan state machine (server.py:103-143); see the
+        module docstring. Every answer is counted in ``stats``; one that
+        raises counts as an error."""
+        start, outcome, waited = time.perf_counter(), "error", False
+        try:
+            res, waited = self._answer(key)
+            outcome = res.source or "error"
+            return res
+        finally:
+            self.stats.record(outcome, time.perf_counter() - start, waited)
 
     def calc_avg_many(self, keys: list) -> list[CacheResult]:
         """calc_avg over a key list with a few jobs in flight
@@ -240,7 +304,8 @@ class PartitionCache:
         job-concurrent by design, each call builds its own Observation,
         and a repeated key waits on its partition's writer lock like
         concurrent calc_avg calls do. Measured on the 5-key bench
-        probe: create pass 1.29x faster, reuse 1.57x (r13)."""
+        probe: create pass 1.29x faster, reuse 1.57x (r13, when every
+        reuse still ran one Spark job; a reuse is now a driver read)."""
         from concurrent.futures import ThreadPoolExecutor
 
         if len(keys) <= 1:
@@ -252,7 +317,7 @@ class PartitionCache:
 
     def invalidate(self) -> None:
         """Drop the whole cache (performance_analyzer.py:26-34, O16)."""
-        delete_tree(self.spark, self.cache_root)
+        self._fs.delete(self._Path(self.cache_root), True)
 
     def warm_all(self) -> None:
         """Bulk idiomatic variant: one partitioned write materializes every
@@ -263,8 +328,7 @@ class PartitionCache:
         committed."""
         self.main.write.partitionBy(self.key_col).mode("overwrite").parquet(self.cache_root)
         self._set_replication(self.cache_root)
-        fs, root = _hadoop_fs(self.spark, self.cache_root)
-        for st in fs.listStatus(root):
+        for st in self._fs.listStatus(self._Path(self.cache_root)):
             part = st.getPath()
             if st.isDirectory() and part.getName().startswith(f"{self.key_col}="):
-                fs.create(part.suffix("/_SUCCESS"), True).close()
+                self._fs.create(part.suffix("/_SUCCESS"), True).close()

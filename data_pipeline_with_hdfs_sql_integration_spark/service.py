@@ -17,6 +17,8 @@ the network skin:
   _vendor protobuf shim) — the reference's own `FromString` parses the
   responses unchanged. Message-layer wire parity is closed; only
   grpcio's HTTP/2 frame transport remains absent (see serve_grpc).
+  ``GET /Stats`` answers the partition cache's CalcAvgLoan outcome
+  counts and seconds as JSON (``Pipeline.cache_stats``).
 - ``serve_grpc``: the wire-identical gRPC variant, gated behind an
   import-try because grpcio is not installed in this container.
 
@@ -46,6 +48,10 @@ _VERB_MESSAGES = {
 }
 
 _PROTO_CT = "application/x-protobuf"
+
+
+class _BadRequest(ValueError):
+    """A request body the verb cannot use; answered with HTTP 400."""
 
 
 class LenderHttpService:
@@ -108,7 +114,11 @@ class LenderHttpService:
         if verb == "BlockLocations":
             return self.block_locations(str(body.get("path", "")))
         if verb == "CalcAvgLoan":
-            return self.calc_avg_loan(int(body.get("county_code", 0)))
+            try:
+                county_code = int(body.get("county_code", 0))
+            except (TypeError, ValueError, OverflowError):
+                raise _BadRequest("county_code must be an integer") from None
+            return self.calc_avg_loan(county_code)
         raise KeyError(verb)
 
     def start(self) -> int:
@@ -116,6 +126,21 @@ class LenderHttpService:
         service = self
 
         class Handler(BaseHTTPRequestHandler):
+            def _reply(self, payload: bytes, ctype: str) -> None:
+                self.send_response(200)
+                self.send_header("Content-Type", ctype)
+                self.send_header("Content-Length", str(len(payload)))
+                self.end_headers()
+                self.wfile.write(payload)
+
+            def do_GET(self) -> None:  # noqa: N802 — http.server API
+                if self.path.strip("/") != "Stats":
+                    self.send_error(404, "GET serves only /Stats")
+                    return
+                self._reply(
+                    json.dumps(service.pipeline.cache_stats()).encode(), "application/json"
+                )
+
             def do_POST(self) -> None:  # noqa: N802 — http.server API
                 verb = self.path.strip("/")
                 if verb not in _VERBS:
@@ -150,23 +175,25 @@ class LenderHttpService:
                     except Exception:
                         self.send_error(400, "malformed protobuf body")
                         return
-                    resp = json_format.ParseDict(
-                        service._handle(verb, body), classes[resp_name]()
-                    )
-                    payload, ctype = resp.SerializeToString(), _PROTO_CT
                 else:
                     try:
                         body = json.loads(raw or b"{}")
                     except ValueError:
                         self.send_error(400, "request body must be JSON")
                         return
-                    payload = json.dumps(service._handle(verb, body)).encode()
-                    ctype = "application/json"
-                self.send_response(200)
-                self.send_header("Content-Type", ctype)
-                self.send_header("Content-Length", str(len(payload)))
-                self.end_headers()
-                self.wfile.write(payload)
+                    if not isinstance(body, dict):
+                        self.send_error(400, "request body must be a JSON object")
+                        return
+                try:
+                    out = service._handle(verb, body)
+                except _BadRequest as exc:
+                    self.send_error(400, str(exc))
+                    return
+                if is_proto:
+                    resp = json_format.ParseDict(out, classes[resp_name]())
+                    self._reply(resp.SerializeToString(), _PROTO_CT)
+                else:
+                    self._reply(json.dumps(out).encode(), "application/json")
 
             def log_message(self, *args) -> None:  # quiet test output
                 pass
@@ -257,6 +284,11 @@ class LenderHttpClient:
 
     def calc_avg_loan(self, county_code: int) -> dict:
         return self._call("CalcAvgLoan", {"county_code": county_code})
+
+    def stats(self) -> dict:
+        """``GET /Stats`` (JSON on either wire)."""
+        with urllib.request.urlopen(f"{self.base}/Stats", timeout=self.timeout_s) as resp:
+            return json.loads(resp.read())
 
 
 def serve_grpc(pipeline: Pipeline, port: int = 5000, max_workers: int = 10):

@@ -28,15 +28,108 @@ def test_cache_create_then_reuse(cache):
     assert first.avg == second.avg and first.error == "" == second.error
 
 
-def test_cache_recreate_on_corruption(cache):
+def _overwrite_with_garbage(f):
+    with open(f, "wb") as fh:
+        fh.write(b"garbage")
+
+
+def _zero_middle_bytes(f):
+    # Same length and an intact footer: only the data pages change.
+    size = os.path.getsize(f)
+    with open(f, "r+b") as fh:
+        fh.seek(size - 8)
+        footer_start = size - 8 - int.from_bytes(fh.read(4), "little")
+        assert size // 2 + 64 <= footer_start
+        fh.seek(size // 2)
+        fh.write(bytes(64))
+
+
+def _zero_checksum(f):
+    # The data stays intact and only its ``.crc`` sidecar (8-byte header,
+    # then one CRC32 per chunk) disagrees: a read that bypasses the
+    # FileSystem's checksum check would still answer reuse.
+    crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+    with open(crc, "r+b") as fh:
+        fh.seek(8)
+        fh.write(bytes(4))
+
+
+@pytest.mark.parametrize(
+    "damage",
+    [_overwrite_with_garbage, _zero_middle_bytes, _zero_checksum],
+    ids=["garbage", "zeroed_middle", "zeroed_checksum"],
+)
+def test_cache_recreate_on_corruption(cache, damage):
     first = cache.calc_avg(10)
-    for f in glob.glob(cache.partition_path(10) + "/*.parquet"):
-        with open(f, "wb") as fh:
-            fh.write(b"garbage")
+    parts = glob.glob(cache.partition_path(10) + "/*.parquet")
+    assert parts
+    for f in parts:
+        damage(f)
     third = cache.calc_avg(10)
     fourth = cache.calc_avg(10)
     assert third.source == "recreate" and fourth.source == "reuse"
     assert third.avg == first.avg == fourth.avg
+
+
+def test_cache_hit_launches_no_spark_job(cache, spark):
+    """A reuse reads the committed partition in the driver."""
+    sc = spark.sparkContext
+    assert cache.calc_avg(5).source == "create"
+    group = "test_cache_hit_launches_no_spark_job"
+    sc.setJobGroup(group, "cache hit")
+    try:
+        hit = cache.calc_avg(5)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert hit.source == "reuse"
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [
+        # Nulls are skipped, as Spark's avg skips them.
+        [(1, 10.25), (1, None), (1, 7.5), (1, None), (1, -3.0), (2, 99.0)],
+        # Integral values: Spark casts them to double before summing, so
+        # the average is 2**52, where exact arithmetic gives 2**52 + 1.
+        [(1, 2**53 + 1), (1, 2**53 + 1), (1, 1), (1, 1), (2, 99)],
+    ],
+    ids=["nulls", "integral"],
+)
+def test_cache_reuse_average_matches_spark_avg(spark, tmp_path, rows):
+    from pyspark.sql import functions as F
+
+    from data_pipeline_with_hdfs_sql_integration_spark.operators.partition_cache import (
+        PartitionCache,
+    )
+
+    vtype = "double" if isinstance(rows[0][1], float) else "bigint"
+    main = spark.createDataFrame(rows, f"k int, v {vtype}")
+    cache = PartitionCache(spark, main, "k", "v", str(tmp_path / "cache"))
+    created, reused = cache.calc_avg(1), cache.calc_avg(1)
+    assert (created.source, reused.source) == ("create", "reuse")
+    want = main.filter(F.col("k") == 1).agg(F.avg("v")).first()[0]
+    assert created.avg == reused.avg == int(want)
+
+
+def test_cache_partition_removed_after_probe_takes_create_path(cache):
+    """An invalidate between the marker probe and the read answers
+    create, not recreate."""
+    import shutil
+
+    first = cache.calc_avg(3)
+    probe = cache._committed
+
+    def probe_then_invalidate(path):
+        found = probe(path)
+        cache._committed = probe
+        shutil.rmtree(path)
+        return found
+
+    cache._committed = probe_then_invalidate
+    again = cache.calc_avg(3)
+    assert again.source == "create" and again.avg == first.avg
+    assert cache.calc_avg(3).source == "reuse"
 
 
 def test_cache_empty_key_is_error_not_null(cache):
@@ -66,7 +159,8 @@ def test_cache_same_key_single_flight_across_invalidates(cache):
     """8 concurrent requests for one key, with invalidate() between
     waves: every request answers the same average, and each
     invalidate epoch writes the partition exactly once (the others
-    wait on the key's lock, then reuse what the writer committed)."""
+    wait on the key's lock, then reuse what the writer committed).
+    The cache's stats count every answer."""
     import sys
     import threading
     from concurrent.futures import ThreadPoolExecutor
@@ -93,6 +187,10 @@ def test_cache_same_key_single_flight_across_invalidates(cache):
     finally:
         sys.setswitchinterval(switch)
     assert len(avgs) == 1
+    # One stats update per request, none lost to the concurrency.
+    stats = cache.stats.snapshot()
+    assert (stats["create"], stats["reuse"], stats["recreate"], stats["error"]) == (3, 3 * (n - 1), 0, 0)
+    assert stats["waited"] <= 3 * (n - 1)
 
 
 def test_cache_uncommitted_partition_takes_create_path(cache):

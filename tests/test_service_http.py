@@ -103,6 +103,38 @@ def test_unknown_verb_is_404(service):
     assert err.value.code == 404
 
 
+@pytest.mark.parametrize(
+    "body", [b'{"county_code": "abc"}', b'{"county_code": null}', b"[1, 2]"]
+)
+def test_malformed_calc_avg_loan_body_is_400(service, body):
+    _, client = service
+    req = urllib.request.Request(
+        f"{client.base}/CalcAvgLoan", data=body,
+        headers={"Content-Type": "application/json"}, method="POST",
+    )
+    with pytest.raises(urllib.error.HTTPError) as err:
+        urllib.request.urlopen(req, timeout=10)
+    assert err.value.code == 400
+
+
+def test_stats_endpoint_counts_outcomes(service):
+    _, client = service
+    client.db_to_hdfs()
+    assert client.calc_avg_loan(5)["source"] == "create"
+    assert client.calc_avg_loan(5)["source"] == "reuse"
+    assert client.calc_avg_loan(9999)["error"]
+    stats = client.stats()
+    assert [stats[k] for k in ("create", "reuse", "recreate", "error")] == [1, 1, 0, 1]
+    assert stats["waited"] == 0
+    assert stats["seconds"]["create"] > 0 and stats["seconds"]["recreate"] == 0
+
+
+def test_stats_count_a_request_before_any_ingest(service):
+    _, client = service
+    assert client.calc_avg_loan(5)["error"]
+    assert client.stats()["error"] == 1
+
+
 def test_concurrent_calc_avg_loan_requests(service):
     """The reference serves 10 concurrent RPC workers; the HTTP skin is
     a ThreadingHTTPServer and Spark job submission is thread-safe, so
